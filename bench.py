@@ -104,9 +104,11 @@ def _stage_sum_for_group(spark, group: str) -> float | None:
     """Sum of completed-stage WALL durations (first task launch ->
     stage completion) across one job group's jobs, read from the
     in-process AppStatusStore (always populated even with the UI server
-    disabled — no config change). Called right AFTER the group's last
-    execution, outside the timed region and before store eviction can
-    touch the row's entries. None on any introspection failure —
+    disabled — no config change). Every attempt of every stage counts
+    (a retried stage's earlier attempts did real work), and a stage
+    shared by several jobs counts once. Called right AFTER the group's
+    last execution, outside the timed region and before store eviction
+    can touch the row's entries. None on any introspection failure —
     diagnostics must never fail the bench."""
     try:
         sc = spark.sparkContext
@@ -114,19 +116,24 @@ def _stage_sum_for_group(spark, group: str) -> float | None:
         store = sc._jsc.sc().statusStore().store()
         jcls = jvm.java.lang.Class.forName("org.apache.spark.status.JobDataWrapper")
         scls = jvm.java.lang.Class.forName("org.apache.spark.status.StageDataWrapper")
-        total = 0.0
+        stage_ids: set[int] = set()
         for jid in sc.statusTracker().getJobIdsForGroup(group):
             sids = store.read(jcls, jid).info().stageIds()
-            for k in range(sids.size()):
+            stage_ids.update(sids.apply(k) for k in range(sids.size()))
+        total = 0.0
+        for sid in stage_ids:
+            attempt = 0
+            while True:
                 key = sc._gateway.new_array(jvm.int, 2)
-                key[0], key[1] = sids.apply(k), 0
+                key[0], key[1] = sid, attempt
                 try:
                     sinfo = store.read(scls, key).info()
                 except Exception:
-                    continue  # skipped/evicted stage attempt
+                    break  # no further attempt (or evicted)
                 ft, ct = sinfo.firstTaskLaunchedTime(), sinfo.completionTime()
                 if ft.isDefined() and ct.isDefined():
                     total += (ct.get().getTime() - ft.get().getTime()) / 1000.0
+                attempt += 1
         return round(total, 3)
     except Exception:
         return None

@@ -322,14 +322,12 @@ class CypherEngine:
 
         erows = [(lbl, resolve(s), resolve(d), props) for lbl, s, d, props in pending_edges]
         new_e = self._build_edges(g, erows)
-        if new_v is not None:
-            g.enforce_unique("vertices", new_v)
-        if new_e is not None:
-            g.enforce_unique("edges", new_e)
-        if new_v is not None:
-            self._commit_new(g, "vertices", new_v)
-        if new_e is not None:
-            self._commit_new(g, "edges", new_e)
+        batches = [("vertices", new_v), ("edges", new_e)]
+        batches = [(kind, rows) for kind, rows in batches if rows is not None]
+        for kind, rows in batches:
+            g.enforce_unique(kind, rows)
+        for kind, rows in batches:
+            g.append(kind, rows)
 
     def _build_vertices(self, g: Graph, rows: list[tuple[str, dict]]):
         from postgraph_spark.graph import VERTEX_SCHEMA, make_graphid
@@ -351,21 +349,6 @@ class CypherEngine:
             lid, eid = g.alloc_entry_ids(label, 1, kind="edge")
             data.append((make_graphid(lid, eid), src, dst, label, json.dumps(props)))
         return self.spark.createDataFrame(data, EDGE_SCHEMA) if data else None
-
-    def _commit_new(self, g: Graph, kind: str, new: DataFrame) -> None:
-        g.invalidate_prop_types()
-        tbl = g.vertices if kind == "vertices" else g.edges
-        if "pv" in tbl.columns:
-            new = new.withColumn("pv", F.try_parse_json("properties"))
-        tbl = tbl.unionByName(new)
-        if g.durable_path:
-            # pin the union (bounded lineage across repeated CREATEs),
-            # then append ONLY the new rows — O(rows), not the former
-            # O(table) full persist (round-5 verdict item #3)
-            tbl = tbl.localCheckpoint(eager=True)
-        setattr(g, kind, tbl)
-        if g.durable_path:
-            g.persist_append(kind, new)
 
 
 def _literal_value(e):

@@ -120,11 +120,6 @@ def make_graphid(label_id: int, entry_id: int) -> int:
     return (label_id << ENTRY_ID_BITS) | entry_id
 
 
-def graphid_label_id(col: F.Column) -> F.Column:
-    """GET_LABEL_ID: high 16 bits (graphid.h:49)."""
-    return F.shiftrightunsigned(col, ENTRY_ID_BITS)
-
-
 def graphid_entry_id(col: F.Column) -> F.Column:
     """GET_ENTRY_ID: low 48 bits (graphid.h:52)."""
     return col.bitwiseAND(F.lit(ENTRY_ID_MASK))
@@ -147,8 +142,10 @@ class Graph:
         constraints: list[dict] | None = None,
     ):
         self.name = name
-        self.vertices = vertices
-        self.edges = edges
+        #: the two tables; read through the `vertices` / `edges`
+        #: properties, changed only by append() and replace()
+        self._vertices = vertices
+        self._edges = edges
         self.label_ids = dict(label_ids or {})
         #: label-id high-water mark: ids are NEVER reused after DROP
         #: LABEL (graphids pack label_id<<48 | entry_id and each new
@@ -156,6 +153,9 @@ class Graph:
         #: would collide two labels' graphids). Persisted in the catalog
         #: so reloads after drops stay safe.
         self._label_id_hwm = max(self.label_ids.values(), default=0)
+        #: label -> last issued entry id (recovered from the tables on
+        #: first use per label, see alloc_entry_ids)
+        self._next_entry: dict[str, int] = {}
         #: label -> "vertex" | "edge" (explicit DDL or first write interns
         #: it; the analog of LABEL_TYPE_VERTEX/EDGE in ag_label)
         self.label_kinds = dict(label_kinds or {})
@@ -189,17 +189,48 @@ class Graph:
         #: "object"; None = present but untyped)}. Populated ONLY by
         #: builders that know every property's source type (tpch_graph
         #: from native parquet columns; from_rows from the python
-        #: values); INVALIDATED wholesale by every data write. A label
-        #: in prop_types_complete lists ALL properties that can occur on
-        #: it, so an access to an unlisted property is a constant null.
+        #: values); DROPPED wholesale by append() and replace(), the only
+        #: writers of table contents. A label in prop_types_complete
+        #: lists ALL properties that can occur on it, so an access to an
+        #: unlisted property is a constant null.
         self.prop_types: dict[str, dict[str, frozenset | None]] = {}
         self.prop_types_complete: set[str] = set()
 
-    def invalidate_prop_types(self) -> None:
-        """Drop the property-type catalog (called by every write path:
-        a SET/CREATE/MERGE can store any type into any property, so the
-        static knowledge dies with the first mutation — narrowing then
-        simply stops firing; correctness never depends on the catalog)."""
+    @property
+    def vertices(self) -> DataFrame:
+        return self._vertices
+
+    @property
+    def edges(self) -> DataFrame:
+        return self._edges
+
+    def append(self, kind: str, new_rows: DataFrame) -> None:
+        """Commit created rows (CREATE, MERGE, the bulk loader) to the
+        `kind` table ("vertices" or "edges"). `new_rows` must already be
+        stable — pinned or local — so lineage replay never re-allocates
+        their ids. The union is pinned (bounded lineage across repeated
+        writes) and, when durable, ONLY the new rows are appended to
+        disk: O(rows), not an O(table) rewrite."""
+        table = getattr(self, kind)
+        rows = new_rows
+        if "pv" in table.columns:  # keep the variant column in sync
+            rows = rows.withColumn("pv", F.try_parse_json("properties"))
+        self._commit(kind, table.unionByName(rows))
+        self.persist_append(kind, new_rows)
+
+    def replace(self, kind: str, table: DataFrame, labels: list[str]) -> None:
+        """Commit a rewritten `kind` table (SET, DELETE, DROP LABEL):
+        pin it, then, when durable, rewrite only the touched `labels`'
+        partitions on disk."""
+        self._commit(kind, table)
+        self.persist_partitions(kind, labels)
+
+    def _commit(self, kind: str, table: DataFrame) -> None:
+        """Install a pinned table. A write can store any type into any
+        property, so the static property-type catalog dies with it —
+        narrowing then simply stops firing; correctness never depends on
+        the catalog."""
+        setattr(self, f"_{kind}", table.localCheckpoint(eager=True))
         self.prop_types = {}
         self.prop_types_complete = set()
 
@@ -260,7 +291,7 @@ class Graph:
                 # and id-predicate scans get min/max pruning for free —
                 # the id-cluster layout philosophy applied to the cache.
                 df = df.repartitionByRange(par, F.col("label"), F.col("id"))
-            setattr(self, attr, df.cache())
+            setattr(self, f"_{attr}", df.cache())
         return self
 
     # -- construction helpers -------------------------------------------
@@ -440,16 +471,17 @@ class Graph:
         new-vertices/old-edges mix). Superseded snapshot directories are
         garbage-collected after the commit (and opportunistically on the
         next persist if that cleanup itself was interrupted).
-        Incremental commits (the per-statement path) use persist_append /
-        persist_partitions instead; a lakehouse deployment swaps all of
-        this for Delta append/MERGE, which versions instead of swapping.
+        Incremental commits (append() / replace(), the per-statement
+        path) use persist_append / persist_partitions instead; a
+        lakehouse deployment swaps all of this for Delta append/MERGE,
+        which versions instead of swapping.
         Both tables are pinned (localCheckpoint) first — removing files a
         table's lineage still reads would otherwise invalidate it
         (classic parquet overwrite-while-reading hazard)."""
         if not self.durable_path:
             return
-        self.vertices = self.vertices.localCheckpoint(eager=True)
-        self.edges = self.edges.localCheckpoint(eager=True)
+        self._vertices = self._vertices.localCheckpoint(eager=True)
+        self._edges = self._edges.localCheckpoint(eager=True)
         os.makedirs(self.durable_path, exist_ok=True)
         prev = self._snapshot
         epoch = int(prev.rsplit("-", 1)[1]) + 1 if prev else 1
@@ -508,7 +540,7 @@ class Graph:
         partition directory names."""
         if not self.durable_path or not labels:
             return
-        tbl = self.vertices if kind == "vertices" else self.edges
+        tbl = getattr(self, kind)
         schema = VERTEX_SCHEMA if kind == "vertices" else EDGE_SCHEMA
         sub = self._table_dir(kind)
         if not os.path.isdir(sub):  # never snapshotted yet: full write
@@ -570,16 +602,11 @@ class Graph:
             ("vertices",) if kind == "vertex" else ("edges",)
         )
         for attr in tables:
-            tbl = getattr(self, attr)
-            setattr(self, attr, tbl.filter(F.col("label") != label))
-            if self.durable_path:
-                setattr(self, attr, getattr(self, attr).localCheckpoint(eager=True))
-                self.persist_partitions(attr, [label])
+            self.replace(attr, getattr(self, attr).filter(F.col("label") != label), [label])
         del self.label_ids[label]
         self.label_kinds.pop(label, None)
         self.constraints = [c for c in self.constraints if c["label"] != label]
-        if hasattr(self, "_next_entry"):
-            self._next_entry.pop(label, None)
+        self._next_entry.pop(label, None)
         self._write_catalog()
 
     def _unique_key_col(self, prop: str | None) -> F.Column:
@@ -644,7 +671,7 @@ class Graph:
         if not self.constraints:
             return
         batch_labels = {r["label"] for r in new_rows.select("label").distinct().collect()}
-        table = self.vertices if kind == "vertices" else self.edges
+        table = getattr(self, kind)
         for c in self.constraints:
             if c["label"] not in batch_labels:
                 continue
@@ -794,8 +821,6 @@ class Graph:
         lid = self.label_ids.get(label)
         if lid is None:
             lid = self.label_ids[label] = self._alloc_label_id()
-        if not hasattr(self, "_next_entry"):
-            self._next_entry: dict[str, int] = {}
         if label not in self._next_entry:
             mx = 0
             for tbl in (self.vertices, self.edges):
@@ -885,7 +910,7 @@ class GraphCatalog:
             # reload lazily-read tables from the moved directory so
             # lineage does not point at the old path
             reloaded = Graph.read(self.spark, new_path, new_name)
-            g.vertices, g.edges = reloaded.vertices, reloaded.edges
+            g._vertices, g._edges = reloaded.vertices, reloaded.edges
             g._snapshot = reloaded._snapshot
             g._write_catalog()
         self.graphs[new_name] = g

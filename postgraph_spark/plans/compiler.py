@@ -119,10 +119,6 @@ def _const_int(e) -> int | None:
     return None
 
 
-def _entity_struct_vertex(prefix: str = "") -> list[str]:
-    return ["id", "label", "properties"]
-
-
 def _analyze_full_vars(q) -> tuple[set[str], bool]:
     """Statement-wide use analysis for entity-struct pruning (round-11,
     guide-style project-before-the-exchange): a pattern variable whose
@@ -202,7 +198,7 @@ class Scope:
         self.vtypes: dict[str, frozenset] = {}
         #: entity bindings' scan label (round-12): MATCH (c:customer)
         #: records c -> "customer", so property accesses can consult the
-        #: graph's property-type catalog (Graph.prop_types) and compile
+        #: graph's property-type catalog (Graph.prop_atoms) and compile
         #: to a direct typed variant_get instead of runtime dispatch
         self.labels: dict[str, str | None] = {}
 

@@ -10,9 +10,9 @@ Spark design: the clause pipeline stays a DataFrame; a write clause
   1. computes the new/updated/deleted entity rows AS COLUMNS of the pipeline
      DataFrame (so later clauses including RETURN see the post-write state),
   2. applies the delta to the graph's backing tables as a distributed
-     union / join-update / anti-join (the in-memory analog of Delta
-     append / MERGE INTO / DELETE — swap `_commit_*` for Delta ops in a
-     lakehouse deployment),
+     union / join-update / anti-join committed through `Graph.append` /
+     `Graph.replace` (the in-memory analog of Delta append / MERGE INTO /
+     DELETE — swap those two for Delta ops in a lakehouse deployment),
   3. `localCheckpoint`s the pipeline so allocated ids are stable (lineage
      replay must not re-allocate).
 
@@ -25,6 +25,7 @@ driver-side loop.
 from __future__ import annotations
 
 import json
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +44,15 @@ from postgraph_spark.plans.compiler import (
 
 DEFAULT_VLABEL = "_ag_label_vertex"
 DEFAULT_ELABEL = "_ag_label_edge"
+
+#: entity kind -> the Graph table holding it, and that table's schema
+_TABLES = {VKIND_VERTEX: "vertices", VKIND_EDGE: "edges"}
+_TABLE_SCHEMAS = {VKIND_VERTEX: VERTEX_SCHEMA, VKIND_EDGE: EDGE_SCHEMA}
+
+
+def _table_fields(entity: Column, vkind: str) -> list[Column]:
+    """A bound entity struct's stored fields in table order (no `pv`)."""
+    return [entity[f].alias(f) for f in _TABLE_SCHEMAS[vkind].fieldNames()]
 
 
 def _json_set(props: Column, key: str, value_json: Column) -> Column:
@@ -134,9 +144,6 @@ class WriteRunner:
     # ------------------------------------------------------------- driver
 
     def run(self, q: A.SingleQuery) -> DataFrame | None:
-        # writes can store any type into any property: the static
-        # property-type catalog dies before the first clause compiles
-        self.graph.invalidate_prop_types()
         df: DataFrame | None = None
         scope = Scope()
         result: DataFrame | None = None
@@ -188,24 +195,10 @@ class WriteRunner:
             )
         return F.concat(F.lit("{"), F.concat_ws(",", *parts), F.lit("}"))
 
-    def _commit_vertices(self, new_rows: DataFrame) -> None:
-        g = self.graph
-        g.enforce_unique("vertices", new_rows)
-        if "pv" in g.vertices.columns:
-            new_rows = new_rows.withColumn("pv", F.try_parse_json("properties"))
-        g.vertices = g.vertices.unionByName(new_rows).localCheckpoint(eager=True)
-        # durable path: append only the created rows (O(rows), not
-        # O(table) — the created rows were pinned by do_create's
-        # checkpoint, so this re-reads memory, not the backing files)
-        g.persist_append("vertices", new_rows)
-
-    def _commit_edges(self, new_rows: DataFrame) -> None:
-        g = self.graph
-        g.enforce_unique("edges", new_rows)
-        if "pv" in g.edges.columns:
-            new_rows = new_rows.withColumn("pv", F.try_parse_json("properties"))
-        g.edges = g.edges.unionByName(new_rows).localCheckpoint(eager=True)
-        g.persist_append("edges", new_rows)
+    def _commit(self, kind: str, rows: DataFrame) -> None:
+        """`rows` are selected from a checkpointed pipeline (stable ids)."""
+        self.graph.enforce_unique(kind, rows)
+        self.graph.append(kind, rows)
 
     # ------------------------------------------------------------- CREATE
 
@@ -269,28 +262,10 @@ class WriteRunner:
                 prev = nxt
 
         df = df.localCheckpoint(eager=True)  # pin allocated ids
-        if created_v:
-            rows = None
-            for var in created_v:
-                sel = df.select(
-                    F.col(var)["id"].alias("id"),
-                    F.col(var)["label"].alias("label"),
-                    F.col(var)["properties"].alias("properties"),
-                )
-                rows = sel if rows is None else rows.unionByName(sel)
-            self._commit_vertices(rows)
-        if created_e:
-            rows = None
-            for var in created_e:
-                sel = df.select(
-                    F.col(var)["id"].alias("id"),
-                    F.col(var)["start_id"].alias("start_id"),
-                    F.col(var)["end_id"].alias("end_id"),
-                    F.col(var)["label"].alias("label"),
-                    F.col(var)["properties"].alias("properties"),
-                )
-                rows = sel if rows is None else rows.unionByName(sel)
-            self._commit_edges(rows)
+        for vkind, created in ((VKIND_VERTEX, created_v), (VKIND_EDGE, created_e)):
+            if created:
+                sels = [df.select(*_table_fields(F.col(var), vkind)) for var in created]
+                self._commit(_TABLES[vkind], reduce(DataFrame.unionByName, sels))
         df = df.drop("__rn", "__one")
         # anonymous entities drop out of the visible scope
         for var in created_v + created_e:
@@ -324,27 +299,17 @@ class WriteRunner:
                 raise CompileError("SET target must be var.prop or var += map")
         for var, props_col in touched.items():
             kind = scope.kinds.get(var)
-            if kind == VKIND_VERTEX:
-                new_struct = F.struct(
-                    F.col(var)["id"].alias("id"),
-                    F.col(var)["label"].alias("label"),
-                    props_col.alias("properties"),
-                )
-            elif kind == VKIND_EDGE:
-                new_struct = F.struct(
-                    F.col(var)["id"].alias("id"),
-                    F.col(var)["start_id"].alias("start_id"),
-                    F.col(var)["end_id"].alias("end_id"),
-                    F.col(var)["label"].alias("label"),
-                    props_col.alias("properties"),
-                )
-            else:
+            if kind not in _TABLES:
                 raise CompileError(f"cannot SET on {var!r}")
-            df = df.withColumn(var, new_struct)
+            df = df.withColumn(var, F.struct(*[
+                (props_col if f == "properties" else F.col(var)[f]).alias(f)
+                for f in _TABLE_SCHEMAS[kind].fieldNames()
+            ]))
         df = df.localCheckpoint(eager=True)
 
         g = self.graph
         for var in touched:
+            kind = _TABLES[scope.kinds[var]]
             updates = (
                 df.select(F.col(var)["id"].alias("__uid"), F.col(var)["properties"].alias("__uprops"))
                 .groupBy("__uid")
@@ -355,28 +320,18 @@ class WriteRunner:
             upd_labels = [
                 r[0] for r in df.select(F.col(var)["label"]).distinct().collect()
             ]
-            if scope.kinds[var] == VKIND_VERTEX:
-                upd = (
-                    g.vertices.join(updates, F.col("id") == F.col("__uid"), "left_outer")
-                    .withColumn("properties", F.coalesce(F.col("__uprops"), F.col("properties")))
-                    .drop("__uid", "__uprops")
-                )
-                if "pv" in g.vertices.columns:  # keep the variant in sync
-                    upd = upd.withColumn("pv", F.try_parse_json("properties"))
-                g.enforce_unique_post_update(upd, upd_labels)
-                g.vertices = upd.localCheckpoint(eager=True)
-                g.persist_partitions("vertices", upd_labels)
-            else:
-                upd = (
-                    g.edges.join(updates, F.col("id") == F.col("__uid"), "left_outer")
-                    .withColumn("properties", F.coalesce(F.col("__uprops"), F.col("properties")))
-                    .drop("__uid", "__uprops")
-                )
-                if "pv" in g.edges.columns:
-                    upd = upd.withColumn("pv", F.try_parse_json("properties"))
-                g.enforce_unique_post_update(upd, upd_labels)
-                g.edges = upd.localCheckpoint(eager=True)
-                g.persist_partitions("edges", upd_labels)
+            table = getattr(g, kind)
+            upd = (
+                table.join(updates, F.col("id") == F.col("__uid"), "left_outer")
+                .withColumn("properties", F.coalesce(F.col("__uprops"), F.col("properties")))
+                .drop("__uid", "__uprops")
+            )
+            # SET is the one write that rewrites EXISTING properties, so
+            # it alone re-derives the variant column over the whole table
+            if "pv" in table.columns:
+                upd = upd.withColumn("pv", F.try_parse_json("properties"))
+            g.enforce_unique_post_update(upd, upd_labels)
+            g.replace(kind, upd, upd_labels)
         return df
 
     # ------------------------------------------------------------- DELETE
@@ -385,24 +340,24 @@ class WriteRunner:
         if df is None:
             raise CompileError("DELETE requires a preceding MATCH")
         g = self.graph
-        v_ids: DataFrame | None = None
-        e_ids: DataFrame | None = None
+        ids: dict[str, DataFrame] = {}
         for e in c.exprs:
             if not isinstance(e, A.Var):
                 raise CompileError("DELETE takes entity variables")
-            kind = scope.kinds.get(e.name)
-            ids = df.select(F.col(e.name)["id"].alias("id")).distinct()
-            if kind == VKIND_VERTEX:
-                v_ids = ids if v_ids is None else v_ids.union(ids).distinct()
-            elif kind == VKIND_EDGE:
-                e_ids = ids if e_ids is None else e_ids.union(ids).distinct()
-            else:
+            kind = _TABLES.get(scope.kinds.get(e.name))
+            if kind is None:
                 raise CompileError(f"cannot DELETE {e.name!r}")
+            sel = df.select(F.col(e.name)["id"].alias("id"))
+            ids[kind] = ids[kind].union(sel) if kind in ids else sel
+        # pin the deleted ids: every step below reads them, and the first
+        # replace() rewrites files the MATCH pipeline may scan
+        ids = {k: v.distinct().localCheckpoint(eager=True) for k, v in ids.items()}
+        v_ids, e_ids = ids.get("vertices"), ids.get("edges")
 
         edges = g.edges
         # touched label partitions (durable path only): collected from
-        # the DELETED rows so the backing-store rewrite stays partition-
-        # scoped (persist_partitions) instead of a full-table flush
+        # the DELETED rows, before either table is persisted, so the
+        # backing-store rewrite stays partition-scoped
         e_label_dfs = []
         v_labels: list[str] = []
         if e_ids is not None:
@@ -437,16 +392,14 @@ class WriteRunner:
                         v_ids, g.vertices["id"] == v_ids["id"], "left_semi"
                     ).select("label").distinct().collect()
                 ]
-            g.vertices = g.vertices.join(v_ids, g.vertices["id"] == v_ids["id"], "left_anti").localCheckpoint(
-                eager=True
-            )
-        g.edges = edges.localCheckpoint(eager=True)
-        if g.durable_path:
-            e_labels: set[str] = set()
-            for ldf in e_label_dfs:
-                e_labels.update(r[0] for r in ldf.distinct().collect())
-            g.persist_partitions("vertices", v_labels)
-            g.persist_partitions("edges", sorted(e_labels))
+        e_labels: set[str] = set()
+        for ldf in e_label_dfs:
+            e_labels.update(r[0] for r in ldf.distinct().collect())
+        if v_ids is not None:
+            verts = g.vertices.join(v_ids, g.vertices["id"] == v_ids["id"], "left_anti")
+            g.replace("vertices", verts, v_labels)
+        if e_ids is not None or c.detach:
+            g.replace("edges", edges, sorted(e_labels))
 
     # -------------------------------------------------------------- MERGE
     def do_merge(self, c: A.MergeClause, df, scope: Scope):
@@ -648,7 +601,8 @@ class WriteRunner:
                 )
             misses = misses.localCheckpoint(eager=True)  # pin allocated ids
             if v_rows is not None:
-                self._commit_vertices(
+                self._commit(
+                    "vertices",
                     misses.select(
                         F.explode(
                             F.array(*[
@@ -657,10 +611,11 @@ class WriteRunner:
                                 if kind == "v" and not bound
                             ])
                         ).alias("__v")
-                    ).select("__v.id", "__v.label", "__v.properties")
+                    ).select("__v.id", "__v.label", "__v.properties"),
                 )
             if e_rows is not None:
-                self._commit_edges(
+                self._commit(
+                    "edges",
                     misses.select(
                         F.explode(
                             F.array(*[
@@ -669,7 +624,7 @@ class WriteRunner:
                                 if kind == "e"
                             ])
                         ).alias("__e")
-                    ).select("__e.id", "__e.start_id", "__e.end_id", "__e.label", "__e.properties")
+                    ).select("__e.id", "__e.start_id", "__e.end_id", "__e.label", "__e.properties"),
                 )
             # join created entities back to ALL rows on the same keys
             cstructs = misses.select(
@@ -698,20 +653,13 @@ class WriteRunner:
                 joined = joined.drop(cstructs[kn])
 
         # ---- bind each pattern var: matched struct (pv stripped) else created
-        def strip_pv(col: Column, kind: str) -> Column:
-            if kind == "v":
-                return F.struct(col["id"].alias("id"), col["label"].alias("label"),
-                                col["properties"].alias("properties"))
-            return F.struct(col["id"].alias("id"), col["start_id"].alias("start_id"),
-                            col["end_id"].alias("end_id"), col["label"].alias("label"),
-                            col["properties"].alias("properties"))
-
         out = joined
         for kind, var, bound, el, *_r in elems:
             if bound:
                 out = out.drop(f"__pm_{var}")
                 continue
-            pm = strip_pv(F.col(f"__pm_{var}"), kind)
+            vkind = VKIND_VERTEX if kind == "v" else VKIND_EDGE
+            pm = F.struct(*_table_fields(F.col(f"__pm_{var}"), vkind))
             if n_miss and f"__cr_{var}" in out.columns:
                 bound_col = F.when(F.col(f"__pm_{var}").isNotNull(), pm).otherwise(F.col(f"__cr_{var}"))
             else:
@@ -721,7 +669,7 @@ class WriteRunner:
             if anonymous:
                 out = out.drop(var)
             else:
-                scope.kinds[var] = VKIND_VERTEX if kind == "v" else VKIND_EDGE
+                scope.kinds[var] = vkind
         drops = [c0 for c0 in out.columns if c0.startswith("__oc_") or c0.startswith("__oj_")
                  or c0 == "__mk" or c0 == "__one" or c0.startswith("__rn")]
         out = out.drop(*drops)

@@ -9,8 +9,9 @@ endpoints by those user ids. This is the Spark-native re-design:
   label: each row's columns are packed into the JSON properties
   document, graphids are assigned with the same distributed
   per-partition scheme as CREATE (plans/writes.py with_rowid — no
-  single-partition window, no collect of data), and the rows are
-  appended to the graph (incremental persist_append when durable).
+  single-partition window, no collect of data), and the pinned rows are
+  committed with ``Graph.append`` (incremental on-disk append when
+  durable; the property-type catalog is dropped like on any write).
 - The user id column is kept as the ``__id`` property (AGE convention),
   so edge loads resolve endpoints with two equi-joins on
   ``properties.__id`` — shuffle on the join key, broadcast when a side
@@ -62,11 +63,7 @@ def load_vertices(
         F.lit(label).alias("label"),
         _props_json(body, cols, id_col).alias("properties"),
     )
-    if "pv" in graph.vertices.columns:
-        new_rows = new_rows.withColumn("pv", F.try_parse_json("properties"))
-    new_rows = new_rows.localCheckpoint(eager=True)
-    graph.vertices = graph.vertices.unionByName(new_rows).localCheckpoint(eager=True)
-    graph.persist_append("vertices", new_rows.drop("pv") if "pv" in new_rows.columns else new_rows)
+    graph.append("vertices", new_rows.localCheckpoint(eager=True))
     return n
 
 
@@ -117,11 +114,7 @@ def load_edges(
         F.lit(label).alias("label"),
         _props_json(body, cols, None).alias("properties"),
     )
-    if "pv" in graph.edges.columns:
-        new_rows = new_rows.withColumn("pv", F.try_parse_json("properties"))
-    new_rows = new_rows.localCheckpoint(eager=True)
-    graph.edges = graph.edges.unionByName(new_rows).localCheckpoint(eager=True)
-    graph.persist_append("edges", new_rows.drop("pv") if "pv" in new_rows.columns else new_rows)
+    graph.append("edges", new_rows.localCheckpoint(eager=True))
     return n
 
 

@@ -2,11 +2,13 @@
 promises (predicate pushdown through joins, no unguarded cartesians)
 asserted against the OPTIMIZED plan, not timings."""
 
+import os
 import re
 
 import pytest
 
 from postgraph_spark.engine import CypherEngine
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -256,3 +258,15 @@ def test_adamic_adar_capped_adjacency_windows_are_keyed(spark, monkeypatch):
     for line in win_lines:
         # every cap window carries a partition key column
         assert ("w#" in line) or ("s#" in line) or ("d#" in line), line
+
+
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_vector_ops_topk_comma_pattern_no_cartesian(spark, sf):
+    """MATCH (q:emb {vec_id: 0}), (n:emb): the property-filtered side of
+    a comma pattern is broadcast, so the product never plans as a
+    CartesianProduct — including at the scale where the size estimate
+    alone would have chosen one (planned only, not executed)."""
+    from postgraph_spark.queries.reference_funcs import vector_ops_topk
+
+    plan = _physical(vector_ops_topk(spark, os.path.join(os.path.dirname(SF_DIR), sf)))
+    assert "CartesianProduct" not in plan, plan

@@ -5,7 +5,7 @@
    including missing keys and JSON nulls.
 2. The property-type catalog narrows plans (no schema_of_variant in a
    typed statement's plan; WITH aliases materialize only feasible gval
-   fields) and dies on the first write.
+   fields) and dies on the first write, whichever path makes it.
 3. Narrowed group keys keep rollup/grouping-set struct-level nullness
    through the RETURN re-widening.
 """
@@ -17,7 +17,9 @@ from pyspark.sql import functions as F
 
 from postgraph_spark.engine import CypherEngine
 from postgraph_spark.functions import gtype as G
-from postgraph_spark.graph import Graph
+from postgraph_spark.graph import Graph, tpch_graph
+from postgraph_spark.sources import loader as L
+from tests.conftest import SF_DIR
 
 
 ATOM_ROWS = """
@@ -105,16 +107,89 @@ def test_catalog_narrowing_group_key(spark):
     assert all(r["z"]["t"] == G.T_NULL for r in df2.collect())
 
 
-def test_write_invalidates_catalog(spark):
+def _keyed_graph(spark):
+    """A cataloged graph whose vertices carry the loader's `__id` key,
+    so load_edges can resolve endpoints against it."""
+    return Graph.from_rows(
+        spark,
+        "r12w",
+        [("person", {"name": "ann", "age": 34, "__id": 1}),
+         ("person", {"name": "bob", "age": 21, "__id": 2})],
+        [("knows", 0, 1, {"w": 2})],
+    )
+
+
+#: every way table contents change — bulk loads, the engine's literal
+#: CREATE, the WriteRunner clauses, label DDL — and the person ages the
+#: graph holds afterwards (a string age where the path can store one)
+WRITE_PATHS = {
+    "load_vertices": (
+        lambda spark, eng, g: L.load_vertices(
+            g, "person", spark.createDataFrame([("dee", "x")], "name string, age string")
+        ),
+        [21, 34, "x"],
+    ),
+    "load_edges": (
+        lambda spark, eng, g: L.load_edges(
+            g, "knows", spark.createDataFrame([(2, 1)], "s long, d long"),
+            "s", "d", "person", "person",
+        ),
+        [21, 34],
+    ),
+    "literal_create": (
+        lambda spark, eng, g: eng.execute("CREATE (:person {name: 'dee', age: 'x'})"),
+        [21, 34, "x"],
+    ),
+    "pipeline_create": (
+        lambda spark, eng, g: eng.execute(
+            "MATCH (p:person {name: 'ann'}) CREATE (p)-[:knows]->(:person {name: 'dee', age: 'x'})"
+        ),
+        [21, 34, "x"],
+    ),
+    "merge_create": (
+        lambda spark, eng, g: eng.execute("MERGE (:person {name: 'dee', age: 'x'})"),
+        [21, 34, "x"],
+    ),
+    "set": (
+        lambda spark, eng, g: eng.execute("MATCH (p:person {name: 'ann'}) SET p.age = 'x'"),
+        [21, "x"],
+    ),
+    "detach_delete": (
+        lambda spark, eng, g: eng.execute("MATCH (p:person {name: 'ann'}) DETACH DELETE p"),
+        [21],
+    ),
+    "drop_label": (lambda spark, eng, g: eng.execute("DROP ELABEL knows"), [21, 34]),
+}
+
+
+@pytest.mark.parametrize("path", sorted(WRITE_PATHS))
+def test_write_invalidates_catalog(spark, path):
+    write, ages = WRITE_PATHS[path]
     eng = CypherEngine(spark)
-    g = _typed_graph(spark)
-    eng.catalog.register(g)
+    g = eng.catalog.register(_keyed_graph(spark))
     assert g.prop_atoms("person", "age") == frozenset({"long"})
-    eng.execute("CREATE (:person {name: 'dee', age: 'not-a-number'})")
+    write(spark, eng, g)
     assert g.prop_atoms("person", "age") is None  # catalog dead
-    # and the mixed-type data now answers correctly (no stale narrowing)
-    df = eng.execute("MATCH (p:person) WHERE p.age = 'not-a-number' RETURN p.name AS n")
-    assert [r["n"]["s"] for r in df.collect()] == ["dee"]
+    # and the mixed-type data now reads back (a stale typed access
+    # failed with INVALID_VARIANT_CAST)
+    assert sorted(eng.fetch_values("MATCH (p:person) RETURN p.age"), key=str) == ages
+
+
+def test_loaded_new_property_on_complete_label(spark):
+    """A property a bulk load adds to a fully cataloged label reads back
+    (it read as a constant null)."""
+    eng = CypherEngine(spark)
+    g = eng.catalog.register(_typed_graph(spark))
+    rows = spark.createDataFrame([("dee", "x@y")], "name string, email string")
+    L.load_vertices(g, "person", rows)
+    assert eng.fetch_values("MATCH (p:person) WHERE p.name = 'dee' RETURN p.email") == ["x@y"]
+
+
+def test_cached_tpch_graph_keeps_catalog(spark):
+    """cache() rewrites the tables without changing their contents, so
+    the catalog tpch_graph derives survives it (typed access stays on)."""
+    g = tpch_graph(spark, SF_DIR)
+    assert g.prop_atoms("customer", "c_acctbal") is not None
 
 
 def test_rollup_nullness_survives_narrowing(spark):
